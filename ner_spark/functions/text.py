@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# identifier-ish tokens in source code; shared by the Spark pipeline,
-# the DuckDB oracles, and the pure-Python golden oracle (synth.py)
+# identifier-ish tokens in source code; shared by the Spark pipeline
+# and the DuckDB oracles. Gazetteer mentions are maximal [A-Za-z0-9_]+
+# runs instead (operators/mentions.py).
 TOKEN_RE = r"[A-Za-z_][A-Za-z0-9_]*"
 
 

@@ -1,57 +1,99 @@
 """Gazetteer mention detection — the KG analog of the reference's
 char-level tagger (SURVEY §2.5 M1–M8).
 
-Two physical strategies, picked by gazetteer size:
+A mention is a boundary-anchored, leftmost-longest occurrence of a
+gazetteer alias, where a boundary is any character outside
+``[A-Za-z0-9_]``. One matcher (``matcher``) implements it, built once
+per gazetteer per Python worker:
 
-1. ``detect_mentions_join`` — tokenize natively (regexp_extract_all),
-   posexplode, **broadcast equi-join** against the alias dictionary.
-   Pure DataFrame: Catalyst prunes columns, the join never shuffles the
-   corpus side, and everything before the explode stays in whole-stage
-   codegen. This is the 100 TB path for single-token aliases.
+- identifier-only gazetteer (every alias one ``[A-Za-z0-9_]+`` run):
+  a boundary-anchored alias match is exactly a maximal word run equal
+  to an alias, so matching is a token scan plus a set lookup;
+- otherwise (aliases such as ``scikit-learn``): a boundary-anchored
+  alternation regex, longest alias first.
 
-2. ``mention_spans`` — a compiled gazetteer automaton (regex
-   alternation ≈ trie with word boundaries) run batch-at-a-time inside
-   ``mapInPandas``; emits exact char spans (begin, end) per mention and
-   supports multi-token aliases. The automaton is compiled once per
-   Python worker (module-level cache), matching is C-speed
-   `re.finditer` — no per-row Python-level loops over characters.
+Everything else is a thin mapInPandas over that matcher:
 
-``bio_tags_for_files`` reproduces the reference's sentence->tag-list
-shape (my_ner.py:88-96): per file, an array of tokens and an aligned
-array of BIO tags, with BIO validity enforced by construction (B- on
-the first token of a span, I- inside — the hard-coded analog of the
-learned transition constraints at my_ner.py:550-556).
+- ``profile_rows`` — the per-file kernel: (file_key, repo, sorted
+  entities, sorted declared symbols). ``file_profiles`` (the
+  checkpointed job's expensive stage) and
+  ``triples.triples_direct`` (the fused plan behind
+  ``pipeline.extract_triples``) both run it.
+- ``mention_spans`` — exact char spans per mention.
+- ``bio_tags_for_files`` reproduces the reference's sentence->tag-list
+  shape (my_ner.py:88-96): per file, an array of tokens and an aligned
+  array of BIO tags, with BIO validity enforced by construction (B- on
+  the first token of a span, I- inside — the hard-coded analog of the
+  learned transition constraints at my_ner.py:550-556).
 """
 
 from __future__ import annotations
 
+import functools
 import re
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ner_spark.functions.text import TOKEN_RE, tokens
+from ner_spark.functions.text import TOKEN_RE
 
-_AUTOMATON_CACHE: dict[int, tuple[re.Pattern, dict[str, tuple[str, str]]]] = {}
+WORD_RE = re.compile(r"[A-Za-z0-9_]+")
+
+Gazetteer = tuple[tuple[str, str, str], ...]
 
 
-def _automaton(gaz_rows: tuple[tuple[str, str, str], ...]):
-    """Compile (alias, entity, ent_type) rows into a boundary-anchored
-    alternation, longest alias first (leftmost-longest match)."""
-    key = hash(gaz_rows)
-    hit = _AUTOMATON_CACHE.get(key)
-    if hit is None:
-        alias_map = {a: (e, t) for a, e, t in gaz_rows}
-        pat = re.compile(
-            r"(?<![A-Za-z0-9_])("
-            + "|".join(re.escape(a) for a in sorted(alias_map, key=len, reverse=True))
-            + r")(?![A-Za-z0-9_])"
-        )
-        hit = (pat, alias_map)
-        _AUTOMATON_CACHE[key] = hit
-    return hit
+class Matcher:
+    """Boundary-anchored gazetteer matcher over (alias, entity,
+    ent_type) rows."""
+
+    def __init__(self, gaz: Gazetteer):
+        self.alias_map = {a: (e, t) for a, e, t in gaz}
+        self._alias_set = frozenset(self.alias_map)
+        self.pattern: re.Pattern | None = None
+        if not all(WORD_RE.fullmatch(a) for a in self.alias_map):
+            self.pattern = re.compile(
+                r"(?<![A-Za-z0-9_])("
+                + "|".join(re.escape(a) for a in sorted(self.alias_map, key=len, reverse=True))
+                + r")(?![A-Za-z0-9_])"
+            )
+
+    def spans(self, text: str) -> Iterator[tuple[int, int, str]]:
+        """(begin, end, alias) of every mention, left to right."""
+        if self.pattern is None:
+            for m in WORD_RE.finditer(text):
+                if m.group() in self.alias_map:
+                    yield m.start(), m.end(), m.group()
+        else:
+            for m in self.pattern.finditer(text):
+                yield m.start(1), m.end(1), m.group(1)
+
+    def aliases(self, text: str) -> frozenset[str]:
+        """The distinct aliases mentioned in `text`."""
+        if self.pattern is None:
+            return self._alias_set.intersection(WORD_RE.findall(text))
+        return frozenset(self.pattern.findall(text))
+
+
+@functools.lru_cache(maxsize=8)
+def matcher(gaz: Gazetteer) -> Matcher:
+    """The matcher for a sorted gazetteer tuple, cached per process."""
+    return Matcher(gaz)
+
+
+def profile_rows(
+    pdf: pd.DataFrame, gaz: Gazetteer, decl_re: str
+) -> Iterator[tuple[str, str, list[str], list[str]]]:
+    """Per file of a (file_key, repo, content) batch: (file_key, repo,
+    sorted distinct entities, sorted distinct declared symbols)."""
+    m = matcher(gaz)
+    dre = re.compile(decl_re, re.M)
+    for key, repo, text in zip(pdf["file_key"], pdf["repo"], pdf["content"]):
+        ents = sorted({m.alias_map[a][0] for a in m.aliases(text)})
+        syms = sorted({d.group(1) for d in dre.finditer(text)})
+        yield key, repo, ents, syms
 
 
 MENTION_SCHEMA = T.StructType(
@@ -73,7 +115,7 @@ def mention_spans(
     key_col: str = "file_key",
     content_col: str = "content",
 ) -> DataFrame:
-    """Exact char-offset mentions via the gazetteer automaton.
+    """Exact char-offset mentions via the gazetteer matcher.
 
     Input must carry a stable `key_col` (content-derived — never
     monotonically_increasing_id — so output is partitioning-invariant,
@@ -82,45 +124,22 @@ def mention_spans(
     gaz = tuple(sorted(gazetteer))
 
     def run(batches):
-        pat, alias_map = _automaton(gaz)
+        m = matcher(gaz)
         for pdf in batches:
             out = {k: [] for k in ("file_key", "begin", "end", "surface", "entity", "ent_type", "score")}
             for key, text in zip(pdf[key_col], pdf[content_col]):
-                for m in pat.finditer(text):
-                    ent, etype = alias_map[m.group(1)]
+                for b, e, alias in m.spans(text):
+                    ent, etype = m.alias_map[alias]
                     out["file_key"].append(key)
-                    out["begin"].append(m.start(1))
-                    out["end"].append(m.end(1))
-                    out["surface"].append(m.group(1))
+                    out["begin"].append(b)
+                    out["end"].append(e)
+                    out["surface"].append(alias)
                     out["entity"].append(ent)
                     out["ent_type"].append(etype)
                     out["score"].append(1.0)
             yield pd.DataFrame(out)
 
     return files.select(F.col(key_col), F.col(content_col)).mapInPandas(run, MENTION_SCHEMA)
-
-
-def detect_mentions_join(
-    files: DataFrame,
-    gazetteer_df: DataFrame,
-    key_col: str = "file_key",
-    content_col: str = "content",
-) -> DataFrame:
-    """Token-grain mentions via posexplode + broadcast join.
-
-    Returns (file_key, pos, surface, entity, ent_type). The scan reads
-    only (key, content); the gazetteer side broadcasts; map-side the
-    corpus never shuffles.
-    """
-    toks = files.select(
-        F.col(key_col),
-        F.posexplode(tokens(F.col(content_col))).alias("pos", "surface"),
-    )
-    return toks.join(
-        F.broadcast(gazetteer_df.withColumnRenamed("alias", "surface")),
-        "surface",
-        "inner",
-    ).select(key_col, "pos", "surface", "entity", "ent_type")
 
 
 PROFILE_SCHEMA = T.StructType(
@@ -137,40 +156,26 @@ def file_profiles(
     files: DataFrame,
     gazetteer: list[tuple[str, str, str]],
     decl_re: str,
-    key_col: str = "file_key",
-    content_col: str = "content",
 ) -> DataFrame:
     """Single-pass per-file profile: (file_key, repo, entities, symbols).
 
-    ONE pass over `content` extracts both the distinct entity set (the
-    gazetteer automaton) and the declared symbols (decl regex) — the
-    throughput kernel behind extract_triples. Downstream triple
-    families are cheap array explodes over this small table, so the
-    100 TB `content` column is read and regex-scanned exactly once
-    (vs. once per triple family in the naive DAG). Arrays are sorted
-    distinct — deterministic at any parallelism.
+    ONE pass over `content` (``profile_rows``) extracts both the
+    distinct entity set and the declared symbols. Downstream triple
+    families are cheap array explodes over this small table
+    (triples.all_triples_from_profiles), so the `content` column is
+    read and scanned exactly once. Arrays are sorted distinct —
+    deterministic at any parallelism.
     """
     gaz = tuple(sorted(gazetteer))
-    dre = re.compile(decl_re, re.M)
 
     def run(batches):
-        pat, alias_map = _automaton(gaz)
         for pdf in batches:
-            keys, repos, ents_col, syms_col = [], [], [], []
-            for key, repo, text in zip(pdf[key_col], pdf["repo"], pdf[content_col]):
-                ents = sorted({alias_map[m.group(1)][0] for m in pat.finditer(text)})
-                syms = sorted({m.group(1) for m in dre.finditer(text)})
-                keys.append(key)
-                repos.append(repo)
-                ents_col.append(ents)
-                syms_col.append(syms)
             yield pd.DataFrame(
-                {"file_key": keys, "repo": repos, "entities": ents_col, "symbols": syms_col}
+                list(profile_rows(pdf, gaz, decl_re)),
+                columns=["file_key", "repo", "entities", "symbols"],
             )
 
-    return files.select(F.col(key_col), F.col("repo"), F.col(content_col)).mapInPandas(
-        run, PROFILE_SCHEMA
-    )
+    return files.select("file_key", "repo", "content").mapInPandas(run, PROFILE_SCHEMA)
 
 
 BIO_SCHEMA = T.StructType(
@@ -198,15 +203,15 @@ def bio_tags_for_files(
     token_pat = re.compile(TOKEN_RE)
 
     def run(batches):
-        pat, alias_map = _automaton(gaz)
+        m = matcher(gaz)
         for pdf in batches:
             keys, tok_col, tag_col = [], [], []
             for key, text in zip(pdf[key_col], pdf[content_col]):
-                toks = [(m.start(), m.end(), m.group(0)) for m in token_pat.finditer(text)]
+                toks = [(t.start(), t.end(), t.group(0)) for t in token_pat.finditer(text)]
                 tags = ["O"] * len(toks)
-                spans = [(m.start(1), m.end(1), alias_map[m.group(1)][1]) for m in pat.finditer(text)]
                 ti = 0
-                for b, e, etype in spans:
+                for b, e, alias in m.spans(text):
+                    etype = m.alias_map[alias][1]
                     while ti < len(toks) and toks[ti][1] <= b:
                         ti += 1
                     first = True

@@ -5,17 +5,27 @@ contract (BASELINE.json north_star):
   - entity COOCCURS  entity      (within-file co-occurrence, e1 < e2)
   - file   DECLARES  symbol      (lang-aware declaration regexes)
 
-All three are native DataFrame plans. COOCCURS is the one real
-self-join; it joins *distinct per-file entity sets* (tiny vs the token
-stream) on file_key — AQE skew-join handles a mega-file, and the
-pair-count per file is bounded by (entities-per-file choose 2), not by
-file size.
+Both plans that make these families start from the per-file kernel
+``mentions.profile_rows``:
+
+  - ``*_from_profiles`` derive them from the checkpointed
+    ``file_profiles`` table (the resumable job);
+  - ``triples_direct`` expands them batch-locally inside the kernel's
+    own pass (the fused plan behind ``pipeline.extract_triples``).
+
+The pair count per file is bounded by (entities-per-file choose 2),
+not by file size.
 """
 
 from __future__ import annotations
 
+import itertools
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ner_spark.operators.mentions import profile_rows
 
 # shared with synth.golden_triples_for_file and the DuckDB oracles
 DECL_RE = r"(?m)^(?:def|class|func|void|public\s+\w+)\s+([A-Za-z_][A-Za-z0-9_]*)"
@@ -30,32 +40,6 @@ CALL_RE = r"([A-Za-z_][A-Za-z0-9_]*)\s*\("
 
 # import header: `import x` / `from x import y` — captures the module
 IMPORT_RE = r"(?m)^(?:import|from)\s+([A-Za-z_][A-Za-z0-9_.]*)"
-
-
-def contains_triples(mentions: DataFrame, files_meta: DataFrame) -> DataFrame:
-    """repo CONTAINS entity (distinct). `files_meta` = (file_key, repo)."""
-    return (
-        mentions.select("file_key", "entity")
-        .join(files_meta.select("file_key", "repo"), "file_key")
-        .select(F.col("repo").alias("subj"), F.lit("CONTAINS").alias("pred"), F.col("entity").alias("obj"))
-        .distinct()
-    )
-
-
-def cooccurs_triples(mentions: DataFrame) -> DataFrame:
-    """entity COOCCURS entity within one file, ordered pairs e1 < e2."""
-    fe = mentions.select("file_key", "entity").distinct()
-    a = fe.alias("a")
-    b = fe.alias("b")
-    return (
-        a.join(b, (F.col("a.file_key") == F.col("b.file_key")) & (F.col("a.entity") < F.col("b.entity")))
-        .select(
-            F.col("a.entity").alias("subj"),
-            F.lit("COOCCURS").alias("pred"),
-            F.col("b.entity").alias("obj"),
-        )
-        .distinct()
-    )
 
 
 def declares_triples(files: DataFrame, key_col: str = "file_key",
@@ -114,16 +98,6 @@ def imports_triples(files: DataFrame, content_col: str = "content") -> DataFrame
     )
 
 
-def all_triples(files: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Union of the three triple families, stable column order."""
-    meta = files.select("file_key", "repo")
-    return (
-        contains_triples(mentions, meta)
-        .unionByName(cooccurs_triples(mentions))
-        .unionByName(declares_triples(files))
-    )
-
-
 # ---------------------------------------------------------------------------
 # profile-based derivations (the fast path): all three families from
 # the single-pass (file_key, repo, entities, symbols) table — pure
@@ -167,12 +141,6 @@ def all_triples_from_profiles(profiles: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# fully-fused path: one content pass emits all three families, one
-# global distinct — the minimal-shuffle plan (scan -> mapInPandas ->
-# exchange -> dedupe), no persist barrier, no branch fan-out.
-# ---------------------------------------------------------------------------
-
 TRIPLE_SCHEMA = "subj string, pred string, obj string"
 
 
@@ -180,15 +148,13 @@ def triples_direct(
     files: DataFrame,
     gazetteer: list[tuple[str, str, str]],
     decl_re: str = DECL_RE,
-    key_col: str = "file_key",
-    content_col: str = "content",
 ) -> DataFrame:
     """(subj, pred, obj) straight out of the single content pass.
 
-    ONE fused Python kernel per batch emits batch-locally-deduped
-    CONTAINS/COOCCURS sets plus per-file-deduped DECLARES symbols; one
-    global distinct dedupes across partitions with map-side partial
-    aggregation. At 100 TB this is one scan and one exchange whose
+    Per batch, the ``profile_rows`` kernel's output is expanded into
+    batch-locally-deduped CONTAINS/COOCCURS sets plus per-file-deduped
+    DECLARES symbols; one global distinct dedupes across partitions
+    with map-side partial aggregation. One scan and one exchange whose
     input is the batch-distinct triple stream, far below the token
     stream.
 
@@ -196,60 +162,32 @@ def triples_direct(
     local[32]): split entity/declaration kernels (second content scan
     + Arrow decode cost more than the saved shuffle: 30.2s vs 22.6s)
     and persist-then-split-distinct (cache write/read of the triple
-    stream outweighed the exchange it avoided: 28.7s).
+    stream outweighed the exchange it avoided: 28.7s). Composing
+    ``all_triples_from_profiles(file_profiles(...))`` runs the kernel
+    once per family branch.
     """
-    import itertools
-    import re as _re
-
-    import pandas as _pd
-
-    from ner_spark.operators.mentions import _automaton
-
     gaz = tuple(sorted(gazetteer))
-    dre = _re.compile(decl_re, _re.M)
-    # when every gazetteer alias is a single [A-Za-z0-9_]+ identifier,
-    # "boundary-anchored alias match" == "alias appears as a maximal
-    # token run": one cheap token findall + a set intersection replaces
-    # the 86-way alternation scan (measured 1.85x on the matching step,
-    # 1.44x end-to-end at the 16-core probe, output verified identical
-    # triple-for-triple on the 4M-file corpus). Aliases with other
-    # characters fall back to the automaton; mention_spans always keeps
-    # it — spans need positions, this kernel only needs the set.
-    token_mode = all(_re.fullmatch(r"[A-Za-z0-9_]+", a) for a, _, _ in gaz)
-    tok_re = _re.compile(r"[A-Za-z0-9_]+")
 
     def run(batches):
-        pat, alias_map = _automaton(gaz)
-        alias_keys = frozenset(alias_map)
         for pdf in batches:
             contains: set[tuple[str, str]] = set()
             cooccurs: set[tuple[str, str]] = set()
             subjs, preds, objs = [], [], []
-            for key, repo, text in zip(pdf[key_col], pdf["repo"], pdf[content_col]):
-                if token_mode:
-                    hit = set(tok_re.findall(text)).intersection(alias_keys)
-                else:
-                    hit = {m.group(1) for m in pat.finditer(text)}
-                ents = sorted({alias_map[t][0] for t in hit})
-                for e in ents:
-                    contains.add((repo, e))
-                for pair in itertools.combinations(ents, 2):
-                    cooccurs.add(pair)
-                for sym in sorted({m.group(1) for m in dre.finditer(text)}):
-                    subjs.append(key)
-                    preds.append("DECLARES")
-                    objs.append(sym)
-            for repo, e in contains:
-                subjs.append(repo)
-                preds.append("CONTAINS")
-                objs.append(e)
-            for a, b in cooccurs:
-                subjs.append(a)
-                preds.append("COOCCURS")
-                objs.append(b)
-            yield _pd.DataFrame({"subj": subjs, "pred": preds, "obj": objs})
+            for key, repo, ents, syms in profile_rows(pdf, gaz, decl_re):
+                contains.update((repo, e) for e in ents)
+                cooccurs.update(itertools.combinations(ents, 2))
+                subjs += [key] * len(syms)
+                objs += syms
+            preds += ["DECLARES"] * len(subjs)
+            for pairs, pred in ((contains, "CONTAINS"), (cooccurs, "COOCCURS")):
+                for a, b in pairs:
+                    subjs.append(a)
+                    preds.append(pred)
+                    objs.append(b)
+            yield pd.DataFrame({"subj": subjs, "pred": preds, "obj": objs})
 
-    raw = files.select(F.col(key_col), F.col("repo"), F.col(content_col)).mapInPandas(
-        run, TRIPLE_SCHEMA
+    return (
+        files.select("file_key", "repo", "content")
+        .mapInPandas(run, TRIPLE_SCHEMA)
+        .distinct()
     )
-    return raw.distinct()

@@ -22,6 +22,7 @@ process boundary over on-disk files, README "The wiki corpus"):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from collections.abc import Callable
@@ -122,6 +123,21 @@ class PipelineCheckpointer:
         return m["content_checksum"]
 
 
+def input_listing_fingerprint(spark: SparkSession, path: str) -> str:
+    """md5 over (path, size, mtime) of every file under `path`, listed
+    through the Hadoop FileSystem so cluster paths work. An input
+    rewritten in place under the same path changes its listing."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    it = fs.listFiles(root, True)
+    listing = []
+    while it.hasNext():
+        st = it.next()
+        listing.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return hashlib.md5(repr(sorted(listing)).encode()).hexdigest()
+
+
 def run_kg_checkpointed(
     spark: SparkSession,
     files_path: str,
@@ -135,8 +151,8 @@ def run_kg_checkpointed(
       triples   — explode/distinct derivations from profiles
 
     Re-running after a crash skips every completed stage whose input
-    fingerprint still matches; changing the input path or gazetteer
-    invalidates from the top.
+    fingerprint still matches; changing the input files (listing:
+    names, sizes, mtimes) or the gazetteer invalidates from the top.
     """
     from ner_spark import synth
     from ner_spark.operators.mentions import file_profiles
@@ -146,12 +162,10 @@ def run_kg_checkpointed(
     gaz = gazetteer if gazetteer is not None else synth.gazetteer_rows()
     cp = PipelineCheckpointer(spark, root)
 
-    import hashlib
-
     # NOT builtin hash(): that is salted per-process, which would
     # invalidate every resume
     gaz_fp = hashlib.md5(repr(sorted(gaz)).encode()).hexdigest()
-    src_fp = f"{files_path}|{gaz_fp}"
+    src_fp = f"{input_listing_fingerprint(spark, files_path)}|{gaz_fp}"
 
     profiles = cp.stage(
         "profiles",

@@ -1,10 +1,13 @@
 """End-to-end KG pipeline: files -> mentions -> (link/canonicalize) -> triples.
 
-The flagship lifecycle (SURVEY §3.3's serving path, re-expressed):
-one scan, one mapInPandas (mention automaton), one broadcast join, one
-self-join, all planned by Catalyst. `file_key` is content-derived
-(repo/path) — never monotonically_increasing_id — so results are
-identical at any parallelism (north-rule determinism).
+Both triple plans run one per-file kernel (mentions.profile_rows):
+``extract_triples`` fuses it with the triple expansion in one
+mapInPandas pass plus one distinct; the resumable job
+(plans/checkpoint.run_kg_checkpointed) checkpoints its output as
+``file_profiles`` and derives the families from that table.
+`file_key` is content-derived (repo/path) — never
+monotonically_increasing_id — so results are identical at any
+parallelism (north-rule determinism).
 """
 
 from __future__ import annotations
@@ -14,13 +17,7 @@ from pyspark.sql import functions as F
 
 from ner_spark import synth
 from ner_spark.functions.text import content_sha256
-from ner_spark.operators.mentions import file_profiles, mention_spans  # noqa: F401
-from ner_spark.operators.triples import (  # noqa: F401
-    DECL_RE,
-    all_triples,
-    all_triples_from_profiles,
-    triples_direct,
-)
+from ner_spark.operators.triples import DECL_RE, triples_direct
 
 
 def with_file_key(files: DataFrame) -> DataFrame:
@@ -37,17 +34,16 @@ def extract_triples(
     """files(repo,path,commit,lang,content) -> distinct (subj,pred,obj).
 
     Physical shape (the minimal plan): ONE mapInPandas pass over
-    `content` emits all three triple families (gazetteer automaton +
-    declaration regex fused — python `re` beats the JVM regex ~3x on
-    this workload), then ONE distinct shuffle dedupes globally with
-    map-side partial aggregation. The 100 TB content column is scanned
-    exactly once and the only exchanged data is the near-distinct
-    triple stream.
+    `content` runs the per-file kernel (mentions.profile_rows: the
+    gazetteer matcher plus the declaration regex) and expands its
+    output into all three triple families batch-locally, then ONE
+    distinct shuffle dedupes globally with map-side partial
+    aggregation. The content column is scanned exactly once and the
+    only exchanged data is the near-distinct triple stream.
 
-    The two-stage profile variant (file_profiles ->
-    all_triples_from_profiles) remains for the resumable pipeline,
-    where the profile parquet is the checkpoint boundary
-    (plans/checkpoint.py).
+    The resumable job runs the same kernel as ``file_profiles`` and
+    derives the families with ``all_triples_from_profiles``, where the
+    profile parquet is the checkpoint boundary (plans/checkpoint.py).
     """
     gaz = gazetteer if gazetteer is not None else synth.gazetteer_rows()
     keyed = with_file_key(files)

@@ -13,7 +13,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def _driver_mem() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else an eighth of physical memory clamped
+    to 1-2 GiB in 256 MiB steps: the heap is committed up front
+    (-Xms = -Xmx), so it must fit the host it starts on."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(2048, total_mb // 8)) // 256 * 256}m"
 
 
 def get_spark(
@@ -30,6 +41,7 @@ def get_spark(
     stage on a real cluster.
     """
     cpus = cpus or DEFAULT_CPUS
+    driver_mem = _driver_mem()
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -44,23 +56,16 @@ def get_spark(
         # large `content` strings: keep Arrow batches bounded so the
         # Python workers never hold more than ~batch rows of file text
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
-        # Fixed, pre-touched heap: without it, G1 grows the heap under
-        # load and every young GC triggers kernel page-commit storms
-        # (observed Sys >> User in GC logs, ~4 s pauses at 32 threads).
-        # Pre-touching commits all pages once at startup instead.
-        # -Xms defaults to the SAME value as spark.driver.memory so a
-        # user lowering SPARK_GRAFT_DRIVER_MEM can never end up with
-        # Xms > Xmx (opaque JVM launcher failure).
+        # Fixed heap (-Xms = spark.driver.memory): without it, G1 grows
+        # the heap under load and young GCs trigger kernel page-commit
+        # storms (observed Sys >> User in GC logs, ~4 s pauses at 32
+        # threads). Equal values also mean lowering the heap can never
+        # leave Xms > Xmx (opaque JVM launcher failure).
         .config(
             "spark.driver.extraJavaOptions",
-            "-Dio.netty.tryReflectionSetAccessible=true "
-            + os.environ.get(
-                "SPARK_GRAFT_XMS",
-                "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"),
-            )
-            + " -XX:+AlwaysPreTouch",
+            f"-Dio.netty.tryReflectionSetAccessible=true -Xms{driver_mem}",
         )
         .config("spark.python.worker.faulthandler.enabled", "true")
     )

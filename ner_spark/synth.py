@@ -192,7 +192,9 @@ def golden_triples_for_file(file_id: int) -> set[tuple[str, str, str]]:
     repo, path, commit, lang, content = _gen_one(file_id)
     import re
 
-    toks = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", content))
+    # a mention is a maximal [A-Za-z0-9_]+ run equal to an alias, so
+    # `tf` in `3tf` is not one
+    toks = set(re.findall(r"[A-Za-z0-9_]+", content))
     ents = sorted({_ALIAS2ENT[t] for t in toks if t in _ALIAS2ENT})
     trips: set[tuple[str, str, str]] = set()
     for e in ents:

@@ -1,8 +1,9 @@
 """Shared Spark fixture for the ner_spark test suite.
 
-One session-scoped local[8] session keeps the suite fast; individual
-tests that need to prove parallelism-invariance build their own frames
-with explicit repartition() instead of new sessions.
+One session-scoped local[N] session (N = SPARK_GRAFT_CPUS, else the
+host's CPU count) keeps the suite fast; individual tests that need to
+prove parallelism-invariance build their own frames with explicit
+repartition() instead of new sessions.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("ner_spark_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("ner_spark_tests", shuffle_partitions=8)
     yield s
 
 

@@ -30,6 +30,7 @@ def test_checkpoint_resume_skips_completed_stages(spark, tmp_path):
 
     t1 = run_kg_checkpointed(spark, files_path, root)
     first = {tuple(r) for r in t1.collect()}
+    assert first == synth.golden_triples(40)
     man = json.loads((Path(root) / "profiles" / "manifest.json").read_text())
     assert man["status"] == "complete"
     assert man["rows_out"] == 40
@@ -38,7 +39,7 @@ def test_checkpoint_resume_skips_completed_stages(spark, tmp_path):
     # resume: nothing recomputes, same rows come back
     cp_probe = PipelineCheckpointer(spark, root)
     t2 = run_kg_checkpointed(spark, files_path, root)
-    assert {tuple(r) for r in t2.collect()} == first
+    assert {tuple(r) for r in t2.collect()} == synth.golden_triples(40)
     # the manifests were not rewritten (same completion timestamps)
     man2 = json.loads((Path(root) / "profiles" / "manifest.json").read_text())
     assert man2["completed_at_unix"] == man["completed_at_unix"]
@@ -50,6 +51,7 @@ def test_checkpoint_recomputes_after_crash(spark, tmp_path):
     files_path = _files_parquet(spark, tmp_path)
     root = str(tmp_path / "ckpt")
     first = {tuple(r) for r in run_kg_checkpointed(spark, files_path, root).collect()}
+    assert first == synth.golden_triples(40)
 
     (Path(root) / "triples" / "manifest.json").unlink()
     prof_man = json.loads((Path(root) / "profiles" / "manifest.json").read_text())
@@ -71,6 +73,14 @@ def test_checkpoint_invalidates_on_input_change(spark, tmp_path):
     man_b = json.loads((Path(root) / "profiles" / "manifest.json").read_text())
     assert man_b["rows_out"] == 30
     assert man_b["input_fingerprint"] != man_a["input_fingerprint"]
+
+    # same path, rewritten in place: the listing changes, so it recomputes
+    synth.synth_files(spark, 20).write.mode("overwrite").parquet(files_b)
+    got = {tuple(r) for r in run_kg_checkpointed(spark, files_b, root).collect()}
+    man_c = json.loads((Path(root) / "profiles" / "manifest.json").read_text())
+    assert man_c["rows_out"] == 20
+    assert man_c["input_fingerprint"] != man_b["input_fingerprint"]
+    assert got == synth.golden_triples(20)
 
 
 def test_content_checksum_partitioning_invariant(spark):

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ner_spark import synth
-from ner_spark.operators.mentions import bio_tags_for_files, detect_mentions_join, mention_spans
+from ner_spark.operators.mentions import Matcher, bio_tags_for_files, mention_spans
 from ner_spark.plans import pipeline
 
 N_FILES = 60
@@ -36,13 +36,20 @@ def test_content_sha256_invariant_through_pipeline(spark):
 
 def test_mention_spans_exact_offsets(spark):
     files = spark.createDataFrame(
-        [("r", "p", "c", "python", "import numpy\nx = numpy.dot(tf)")],
+        [("r", "p", "c", "python", "import numpy\nx = numpy.dot(tf)\nimport scikit-learn")],
         synth.FILES_SCHEMA,
     )
     keyed = pipeline.with_file_key(files)
-    got = mention_spans(keyed, [("numpy", "numpy", "LIB"), ("tf", "tensorflow", "LIB")]).collect()
-    spans = sorted((r["begin"], r["end"], r["surface"], r["entity"]) for r in got)
-    assert spans == [(7, 12, "numpy", "numpy"), (17, 22, "numpy", "numpy"), (27, 29, "tf", "tensorflow")]
+    gaz = [("numpy", "numpy", "LIB"), ("tf", "tensorflow", "LIB")]
+    want = [(7, 12, "numpy", "numpy"), (17, 22, "numpy", "numpy"), (27, 29, "tf", "tensorflow")]
+    # a non-identifier alias puts the whole gazetteer on the regex path
+    for extra, extra_want in (
+        ([], []),
+        ([("scikit-learn", "sklearn", "LIB")], [(38, 50, "scikit-learn", "sklearn")]),
+    ):
+        got = mention_spans(keyed, gaz + extra).collect()
+        spans = sorted((r["begin"], r["end"], r["surface"], r["entity"]) for r in got)
+        assert spans == want + extra_want
 
 
 def test_mention_spans_word_boundaries(spark):
@@ -55,20 +62,19 @@ def test_mention_spans_word_boundaries(spark):
     assert sorted((r["begin"], r["end"]) for r in got) == [(6, 8), (18, 20)]
 
 
-def test_join_and_automaton_strategies_agree(spark):
-    """Single-token gazetteer: broadcast-join path == automaton path."""
-    keyed = pipeline.with_file_key(_files(spark))
-    gaz_rows = synth.gazetteer_rows()
-    gaz_df = synth.gazetteer_df(spark)
-    a = {
-        (r["file_key"], r["entity"])
-        for r in detect_mentions_join(keyed, gaz_df).select("file_key", "entity").distinct().collect()
-    }
-    b = {
-        (r["file_key"], r["entity"])
-        for r in mention_spans(keyed, gaz_rows).select("file_key", "entity").distinct().collect()
-    }
-    assert a == b
+def test_token_and_regex_matchers_agree():
+    """Identifier-only gazetteer: the token scan gives the same spans
+    and alias sets as the boundary-anchored alternation regex."""
+    gaz = tuple(sorted(synth.gazetteer_rows()))
+    token = Matcher(gaz)
+    # an alias that never occurs forces the regex path
+    regex = Matcher(tuple(sorted(gaz + (("scikit-learn", "sklearn", "LIB"),))))
+    assert token.pattern is None and regex.pattern is not None
+    texts = [synth._gen_one(i)[4] for i in range(200)] + ["3tf x_np np2 tf.tf numpy"]
+    for text in texts:
+        assert list(token.spans(text)) == list(regex.spans(text))
+        assert token.aliases(text) == regex.aliases(text)
+    assert list(token.spans(texts[-1])) == [(13, 15, "tf"), (16, 18, "tf"), (19, 24, "numpy")]
 
 
 def test_bio_tags_validity_and_alignment(spark):
